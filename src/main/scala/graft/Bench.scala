@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
+import graft.index.LayerBroadcasts
 import graft.operators.{SpatialJoin, Tiling}
 import graft.tables.{Images, Synthetic}
 
@@ -52,21 +53,15 @@ object Bench {
    * serial work that must not be billed to every measured run). */
   lazy val benchLayer: graft.index.PolygonLayer = Synthetic.polygonLayer(1024, seed = 42L)
 
-  /** One broadcast of the layer per SparkContext (re-broadcasting per
-   * measured run would bill ~100s of ms of serial work to every sample). */
-  private val bcCache =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[graft.index.PolygonLayer]]()
-  private def layerBc(spark: SparkSession) =
-    bcCache.computeIfAbsent(spark.sparkContext, sc => sc.broadcast(benchLayer))
-
   /** Headline pipeline: derive location, cell id, broadcast PIP join,
    * per-tile (4x4) PIP + cell assignment, aggregate — ONE action (the tile
    * stage consumes the join output inside the same DAG; two actions would
    * recompute the whole lineage and double-count serial job overhead). */
   def headline(spark: SparkSession, input: DataFrame, rep: Int = Rep): Long = {
     import graft.functions.SpatialExprs._
-    val bc = layerBc(spark)
+    // one broadcast per SparkContext: re-broadcasting per measured run would
+    // bill ~100s of ms of serial work to every sample
+    val bc = LayerBroadcasts.of(spark, benchLayer)
     val mask = (1L << 52) - 1
     val side = Tiling.FootprintSide
     val tileGrid = 4
@@ -395,7 +390,7 @@ object Bench {
       val raw = s.read.parquet(imagesPath)
         .select(col("image_id"), col("w"), col("h"), col("phash"))
       import graft.functions.SpatialExprs._
-      val bc = layerBc(s)
+      val bc = LayerBroadcasts.of(s, benchLayer)
       val mask = (1L << 52) - 1
       val imgs = raw
         .withColumn("rep", explode(sequence(lit(0), lit(Rep - 1))))

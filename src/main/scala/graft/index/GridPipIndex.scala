@@ -3,9 +3,8 @@ package graft.index
 import graft.geom.Geom
 
 /**
- * Uniform-grid point-in-polygon accelerator over a [[PolygonLayer]] —
- * replaces the per-probe packed-R-tree descent on the broadcast-join hot
- * path (guide §1.2 step 2: per-task work, after the job shape is right).
+ * Uniform-grid point-in-polygon index over a [[PolygonLayer]] — the
+ * candidate lookup behind every probe of the broadcast spatial join.
  *
  * Precomputation (once per executor, lazily, off the broadcast blob):
  *  - the layer extent is cut into a gw x gh grid sized from the segment
@@ -21,9 +20,10 @@ import graft.geom.Geom
  * Probe cost: one cell lookup + exact ring tests for the (usually zero)
  * rings actually crossing the cell, then a merge with the precomputed
  * constant-parity shapes. For typical layers the vast majority of probes
- * never touch a segment at all, vs ~40-70 bbox tests per R-tree descent.
+ * never touch a segment at all.
  *
- * Exactness: identical results to the tree path by construction —
+ * Exactness: identical results to testing every ring of every shape
+ * (even-odd per shape, boundary counts as in) by construction —
  *  - any point the float cell-mapping can attribute to cell c lies within
  *    c's eps-inflated rectangle (eps is ~1e-9 of the extent, dwarfing the
  *    ~1e-16 relative rounding of the mapping), and crossing registration
@@ -33,8 +33,9 @@ import graft.geom.Geom
  *    bbox, which forces that ring into the cell's crossing list → ON is
  *    always decided by an exact ring test, never by precomputation;
  *  - points outside the layer extent are outside every ring bbox → no keys
- *    (same as a tree search returning no candidates).
- * `IndexSpec` asserts grid == brute-force over all rings on random probes.
+ *    (every ring test would return OUT).
+ * `IndexSpec` asserts grid == that brute-force loop over all rings, on
+ * random, boundary and degenerate probes and on generated layers.
  */
 final class GridPipIndex(layer: PolygonLayer) {
 
@@ -222,9 +223,9 @@ final class GridPipIndex(layer: PolygonLayer) {
   private val emptyKeys = Array.emptyLongArray
   private val emptyShapes = Array.emptyIntArray
 
-  /** Keys of all enclosing shapes, ascending shape order (== tree path). */
+  /** Keys of all enclosing shapes, ascending shape order (== brute force). */
   def findKeys(x: Double, y: Double): Array[Long] = {
-    // NaN coords: the tree path ends up testing rings (all OUT) → empty;
+    // NaN coords: every ring test returns OUT, so no shape encloses them;
     // without this guard the NaN->0 cast would read cell 0's resolved set
     if (x != x || y != y) return emptyKeys
     if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return emptyKeys
@@ -296,15 +297,10 @@ final class GridPipIndex(layer: PolygonLayer) {
     -1L
   }
 
-  /** Indexes of all enclosing shapes, ascending (== tree-path findShapes). */
+  /** Indexes of all enclosing shapes, ascending (== brute force). */
   def findShapeIdxs(x: Double, y: Double): Array[Int] = {
     if (x != x || y != y) return emptyShapes
     if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return emptyShapes
-    val keys = findKeysAsShapes(x, y)
-    keys
-  }
-
-  private def findKeysAsShapes(x: Double, y: Double): Array[Int] = {
     val c = rowOf(y) * gw + colOf(x)
     var ci = cellCrossStart(c); val ce = cellCrossStart(c + 1)
     var bi = cellBaseStart(c); val be = cellBaseStart(c + 1)

@@ -229,13 +229,14 @@ class OperatorSpec extends SparkSuite {
       (0 until 500).map(_ => Array.fill(dims)((rng.nextDouble() * 2 - 1).toFloat)) ++
       Seq(Array.fill(dims)(0.0f),        // all-tie query (every score 0.0)
         cents(2).clone(), cents(9).clone())
+    val centData = HashKernels.toArrayData(cents)
     for (v <- probes) {
       val ad = ArrayData.toArrayData(v)
-      assert(HashKernels.nearestCentroid(ad, cents) == refNearest(v, cents))
-      assert(HashKernels.centroidProbes(ad, cents, 4).toIntArray().toSeq ==
+      assert(HashKernels.nearestCentroid(ad, centData) == refNearest(v, cents))
+      assert(HashKernels.centroidProbes(ad, centData, 4).toIntArray().toSeq ==
         refProbes(v, cents, 4))
-      for (c <- cents)
-        assert(java.lang.Double.doubleToLongBits(HashKernels.cosineVs(ad, c)) ==
+      for ((c, cd) <- cents.zip(centData))
+        assert(java.lang.Double.doubleToLongBits(HashKernels.cosine(ad, cd)) ==
           java.lang.Double.doubleToLongBits(Ann.cosine(v, c)))
     }
   }
