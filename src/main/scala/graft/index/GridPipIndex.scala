@@ -218,8 +218,6 @@ final class GridPipIndex(layer: PolygonLayer) {
     false
   }
 
-  @transient private lazy val keysScratch: ThreadLocal[Array[Long]] =
-    ThreadLocal.withInitial(() => new Array[Long](64))
   private val emptyKeys = Array.emptyLongArray
   private val emptyShapes = Array.emptyIntArray
 
@@ -240,16 +238,10 @@ final class GridPipIndex(layer: PolygonLayer) {
       while (bi < be) { out(k) = shapeKeys(cellBaseShapes(bi)); k += 1; bi += 1 }
       return out
     }
-    var keys = keysScratch.get()
+    // each base shape and each crossing ring emits at most one key
+    val keys = new Array[Long]((be - bi) + (ce - ci))
     var nk = 0
-    @inline def emit(key: Long): Unit = {
-      if (nk == keys.length) {
-        keys = java.util.Arrays.copyOf(keys, keys.length * 2)
-        keysScratch.set(keys)
-      }
-      keys(nk) = key
-      nk += 1
-    }
+    @inline def emit(key: Long): Unit = { keys(nk) = key; nk += 1 }
     while (ci < ce || bi < be) {
       val crossShape = if (ci < ce) ringShape(cellCrossRings(ci)) else Int.MaxValue
       val baseShape = if (bi < be) cellBaseShapes(bi) else Int.MaxValue
@@ -269,7 +261,7 @@ final class GridPipIndex(layer: PolygonLayer) {
         if (isOn || isIn) emit(shapeKeys(crossShape))
       }
     }
-    if (nk == 0) emptyKeys else java.util.Arrays.copyOf(keys, nk)
+    if (nk == 0) emptyKeys else if (nk == keys.length) keys else java.util.Arrays.copyOf(keys, nk)
   }
 
   /** Key of the first (lowest shape index) enclosing shape, or -1. */

@@ -1,10 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.cell.CellIndex
+import graft.functions.KnnTopK
 
 /**
  * k-nearest-neighbor and radius (max-distance) joins via cell-ring expansion —
@@ -19,8 +19,15 @@ import graft.cell.CellIndex
  * are retried with a doubled R — a driver-side loop of a few Spark jobs, each
  * a plain equi-join on cellId (no cross join, no broadcast of the big side).
  *
- * Determinism: ranking is by (squared distance, neighbor id) — no FP
- * reordering hazards, ties broken stably.
+ * Ranking: every round, and the brute-force tail, groups the candidate pairs
+ * by query point with the bounded top-k aggregate
+ * [[graft.functions.KnnTopK]]. Its partial aggregate runs in the candidate
+ * stage and keeps each point's k best candidates, so at most one k-slot
+ * buffer per (map task, query point) crosses the shuffle, never the
+ * candidate pairs themselves, and nothing is sorted.
+ *
+ * Determinism: ranking is by (squared distance, neighbor id), the order of
+ * `ORDER BY dist2, neighbor_id` — no FP reordering hazards, ties broken stably.
  */
 object Knn {
 
@@ -31,6 +38,7 @@ object Knn {
   def knnJoin(spark: SparkSession, points: DataFrame, idCol: String, xCol: String, yCol: String,
               k: Int, res: Int = -1, maxRounds: Int = 8,
               bruteForceBudget: Long = 50000000L): DataFrame = {
+    require(k >= 1, s"knnJoin needs k >= 1, got $k")
     val base = points.select(col(idCol).cast("long").as("id"),
       col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
     // auto resolution: aim for ~k+1 points per cell so the first 3x3 disk
@@ -44,7 +52,7 @@ object Knn {
       // aim for ~2(k+1) points per cell: the 3x3 disk then satisfies the
       // k-th-distance bound for ~all points in ROUND 1 — every extra round
       // costs a full job + fresh codegen, which dominates at moderate n,
-      // while 2x more candidates per point is noise in the ranked shuffle
+      // while 2x more candidates per point is noise in the top-k aggregate
       val csTarget = math.sqrt(w * h / nPoints.toDouble * 2.0 * (k + 1).toDouble)
       math.min(26, math.max(0, math.floor(math.log(360.0 / csTarget) / math.log(2.0)).toInt))
     }
@@ -64,7 +72,7 @@ object Knn {
     while (round < maxRounds && pendingCount > 0) {
       // brute-force cutover for the tail (r6): once the pending set is small
       // enough that pending x n candidate pairs are trivial, one exact
-      // window job replaces the remaining ring-expansion rounds (each a
+      // top-k job replaces the remaining ring-expansion rounds (each a
       // checkpoint + anti-join job chain). Exactness is unchanged — the
       // cross form IS the definition of kNN, ranked by the same
       // (dist2, neighbor_id) law, and a point with fewer than k neighbors
@@ -79,12 +87,7 @@ object Knn {
           .withColumn("dist2",
             (col("ax") - col("bx")) * (col("ax") - col("bx")) +
               (col("ay") - col("by")) * (col("ay") - col("by")))
-        val wf = Window.partitionBy("a_id").orderBy(col("dist2"), col("b_id"))
-        val full = cross
-          .withColumn("rank", row_number().over(wf))
-          .filter(col("rank") <= k)
-          .select(col("a_id").as("id"), col("rank"), col("b_id").as("neighbor_id"),
-            col("dist2"))
+        val full = ranks(topK(cross, k))
         results = if (results == null) full else results.unionByName(full)
         pendingCount = 0
       } else {
@@ -101,42 +104,32 @@ object Knn {
         .withColumn("dist2",
           (col("ax") - col("bx")) * (col("ax") - col("bx")) +
             (col("ay") - col("by")) * (col("ay") - col("by")))
-      val w = Window.partitionBy("a_id").orderBy(col("dist2"), col("b_id"))
-      // FINALITY decided inside the same window pass (guide §2.4: two
-      // operations keyed the same way share one exchange): a point is final
-      // iff it has >= k candidates AND the k-th distance is within the ring
-      // bound. Both facts are window aggregates over the row_number
-      // partitioning — no groupBy summary, no semi/anti join back onto the
-      // ranked rows (r5 shape: summary agg + 2 joins + an extra eager
-      // checkpoint job per round).
+      // FINALITY read from the same top-k buffer that ranks the point: it is
+      // final iff it has >= k candidates (all k slots filled) AND the k-th
+      // distance is within the ring bound — no second pass over the
+      // candidates, no semi/anti join back onto the ranked rows.
       val bound = (ringR * cs) * (ringR * cs)
-      val w2 = Window.partitionBy("a_id")
       // localCheckpoint truncates BOTH execution lineage and the logical
       // plan (without it the per-round union/anti-join chain sends Catalyst
       // analysis superlinear — same lesson as OverlayOp's CC loop); LAZY so
       // the doneCount action below materializes it — one job per round, not
       // two (checkpoint pass + count pass).
-      val ranked = cand
-        .withColumn("rank", row_number().over(w))
-        .withColumn("_n", count(lit(1)).over(w2))
-        .withColumn("_kth", max(when(col("rank") === k, col("dist2"))).over(w2))
-        .filter(col("rank") <= k)
-        .withColumn("_final", col("_n") >= k && col("_kth") <= lit(bound))
-        .select(col("a_id").as("id"), col("rank"), col("b_id").as("neighbor_id"),
-          col("dist2"), col("_final"))
+      val ranked = topK(cand, k)
+        .withColumn("_final", when(size(col("top")) === k,
+          col("top")(k - 1)("dist2") <= lit(bound)).otherwise(false))
         .localCheckpoint(false)
 
-      val done = ranked.filter(col("_final")).drop("_final")
-      // one job decides the round AND materializes the checkpoint; a final
-      // point contributes exactly k rows (_n >= k, rank <= k)
-      val doneCount = done.count() / k
+      val finalPts = ranked.filter(col("_final"))
+      // one job decides the round AND materializes the checkpoint
+      val doneCount = finalPts.count()
+      val done = ranks(finalPts)
       results = if (results == null) done else results.unionByName(done)
-      lastRanked = ranked.filter(!col("_final")).drop("_final")
+      lastRanked = ranks(ranked.filter(!col("_final")))
       live += ranked
       pendingCount -= doneCount
       round += 1
       if (pendingCount > 0 && round < maxRounds) {
-        val nextLazy = pending.join(done.select("id"), Seq("id"), "left_anti")
+        val nextLazy = pending.join(finalPts.select(col("a_id").as("id")), Seq("id"), "left_anti")
         if (pendingCount * nPoints <= bruteForceBudget) {
           // next iteration cuts over to the single brute-force job, which
           // consumes this frame exactly once — materializing it first would
@@ -171,6 +164,16 @@ object Knn {
     pts.unpersist()
     out
   }
+
+  /** Each a_id's k best (dist2, b_id) candidates as one sorted `top` array. */
+  private def topK(cand: DataFrame, k: Int): DataFrame =
+    cand.groupBy("a_id").agg(KnnTopK.agg(col("dist2"), col("b_id"), k).as("top"))
+
+  /** One (id, rank, neighbor_id, dist2) row per entry of [[topK]]'s arrays. */
+  private def ranks(top: DataFrame): DataFrame =
+    top.select(col("a_id").as("id"), posexplode(col("top")).as(Seq("pos", "nn")))
+      .select(col("id"), (col("pos") + 1).as("rank"),
+        col("nn.neighbor_id").as("neighbor_id"), col("nn.dist2").as("dist2"))
 
   /**
    * Radius join: all pairs (a, b), a.id < b.id, within `radius`. Cell size is

@@ -17,8 +17,8 @@ import graft.index.PolygonLayer
  * Two physical strategies, chosen by layer size (mirrors Catalyst's
  * broadcast-vs-shuffle join choice):
  *
- *  1. [[broadcastJoin]] — the polygon layer (SoA + packed STR tree + per-ring
- *     segment indexes) is broadcast once; each point row probes the index
+ *  1. [[broadcastJoin]] — the polygon layer (SoA + uniform-grid PIP index +
+ *     per-ring segment indexes) is broadcast once; each point row probes the index
  *     locally. Zero shuffle of the (huge) point table; `bytes` and other wide
  *     columns are never touched (Parquet column pruning applies upstream).
  *
@@ -26,7 +26,7 @@ import graft.index.PolygonLayer
  *     exploded to covering cells, points keyed by the same cells, and the
  *     equi-join on cellId co-locates candidates; the exact PIP runs per pair.
  *     Hot cells (skew) are split by salting: the polygon side is replicated
- *     per salt, the point side salted randomly-but-deterministically by id —
+ *     per salt, the point side salted deterministically by its coordinates —
  *     explicit skew handling per the north rule, with AQE as backstop.
  *
  * Multi-match semantics: a point on a shared boundary joins BOTH polygons
@@ -98,25 +98,22 @@ object SpatialJoin {
       .withColumn("_cell",
         explode(graft.functions.SpatialExprs.ringCoverXY(col("ring_x"), col("ring_y"), res)))
 
-    // explicit skew handling: find hot cells, salt them
+    // explicit skew handling: find hot cells, salt them. The hot set is
+    // inlined into the plan as a literal set (InSet), so the salts are
+    // codegen column expressions
     val hot = polyCells.groupBy("_cell").count()
       .filter(col("count") > saltThreshold)
-      .select("_cell").as[Long].collect().toSet
-    val hotBc = spark.sparkContext.broadcast(hot)
-    val saltsUdf = udf { (cell: Long) =>
-      if (hotBc.value.contains(cell)) (0 until saltFactor).toArray else Array(0)
-    }
-    val pointSaltUdf = udf { (cell: Long, x: Double, y: Double) =>
-      if (hotBc.value.contains(cell))
-        (java.lang.Double.doubleToLongBits(x) * 31 + java.lang.Double.doubleToLongBits(y)).toInt
-          .abs % saltFactor
-      else 0
-    }
+      .select("_cell").as[Long].collect()
+    val isHot = col("_cell").isin(hot.toIndexedSeq: _*)
 
-    val polySalted = polyCells.withColumn("_salt", explode(saltsUdf(col("_cell"))))
+    // a hot cell's polygons are replicated to every salt, so any
+    // deterministic point salt in [0, saltFactor) finds its candidates
+    val polySalted = polyCells.withColumn("_salt",
+      explode(when(isHot, sequence(lit(0), lit(saltFactor - 1))).otherwise(array(lit(0)))))
     val ptCells = points
       .withColumn("_cell", GraftCell.cellIdCol(col(xCol), col(yCol), res))
-      .withColumn("_salt", pointSaltUdf(col("_cell"), col(xCol), col(yCol)))
+      .withColumn("_salt",
+        when(isHot, pmod(hash(col(xCol), col(yCol)), lit(saltFactor))).otherwise(lit(0)))
 
     // per-candidate ring state: 0 = out, 1 = in, 2 = on-boundary — a codegen
     // expression reading the packed ring arrays in place (a UDF here boxes

@@ -34,7 +34,6 @@ object Tiling {
    */
   def tileAssign(spark: SparkSession, images: DataFrame, tileGrid: Int, res: Int,
                  layer: Option[PolygonLayer] = None): DataFrame = {
-    val side = FootprintSide
     val located = images
       .select(col("image_id"), col("w"), col("h"), col("phash"))
       .withColumn("_cx", graft.functions.GraftFunctions.phashLon(col("phash")))

@@ -1,16 +1,27 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, Partial}
+import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.operators.{SpatialJoin, Tiling}
-import graft.tables.{Images, Synthetic}
+import graft.functions.KnnTopK
+import graft.operators.{Knn, SpatialJoin, Tiling}
+import graft.tables.{Images, SplitMix64, Synthetic}
 
 /**
  * Plan-quality assertions: the claims "filters push down", "columns prune",
  * "hot path stays in whole-stage codegen", "payload bytes are never read by
  * spatial queries" are tested here, not just asserted in prose.
  */
-class PlanSpec extends SparkSuite {
+class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private def imagesParquet: String =
     Images.ensureParquet(spark, "/root/repo/data", "plantest", 200)
@@ -240,5 +251,90 @@ class PlanSpec extends SparkSuite {
     assert(plan.contains("ring_cover"), plan.take(800))
     assert(!plan.toLowerCase.contains("scalaudf") && !plan.contains("BatchEval"),
       "boxed UDF survives on the polygon side")
+  }
+
+  /** Executed plans of the actions `body` runs whose plan holds a node matching `want`. */
+  private def executedPlans(want: SparkPlan => Boolean, expected: Int)(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (find(qe.executedPlan)(want).isDefined) seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.size < expected && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  private def topKAgg(p: SparkPlan, mode: AggregateMode): Boolean =
+    p match {
+      case a: HashAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == mode && e.aggregateFunction.isInstanceOf[KnnTopK])
+      case _ => false
+    }
+
+  test("knnJoin ranks with a partial and a final top-k HashAggregate: no window, sort or object agg") {
+    import spark.implicits._
+    val rng = new SplitMix64(21)
+    val n = 400
+    val pts = (0 until n).map(i => (i.toLong, rng.nextDouble() * 100, rng.nextDouble() * 100))
+      .toDF("id", "x", "y")
+    // cells of 2.8 units hold ~0.3 points, so round 1 finalizes only some
+    // points and the brute-force tail ranks the rest
+    val plans = executedPlans(topKAgg(_, Final), expected = 2) {
+      Knn.knnJoin(spark, pts, "id", "x", "y", k = 4, res = 7, bruteForceBudget = n.toLong * n - 1)
+    }
+    val isTail = (p: SparkPlan) => find(p) {
+      case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true
+      case _ => false
+    }.isDefined
+    val (tail, ring) = plans.partition(isTail)
+    assert(ring.nonEmpty && tail.size == 1,
+      s"want ring-round plans and one tail plan, got ${ring.size} and ${tail.size}")
+    for (plan <- ring ++ tail) {
+      val banned = collect(plan) {
+        case w @ (_: WindowExec | _: WindowGroupLimitExec | _: SortExec |
+                  _: ObjectHashAggregateExec | _: SortAggregateExec) => w.nodeName
+      }
+      assert(banned.isEmpty, s"ranking plan has $banned:\n$plan")
+      val finalAgg = collect(plan) { case a if topKAgg(a, Final) => a }
+      assert(finalAgg.size == 1, plan.toString)
+      // only exchanges and codegen/AQE wrappers may sit between the final
+      // and the partial aggregate: the shuffle carries top-k buffers
+      var exchanged = false
+      def below(p: SparkPlan): SparkPlan = p match {
+        case e: ShuffleExchangeExec => exchanged = true; below(e.child)
+        case s: ShuffleQueryStageExec => below(s.plan)
+        case _: AQEShuffleReadExec | _: WholeStageCodegenExec | _: InputAdapter => below(p.children.head)
+        case other => other
+      }
+      assert(topKAgg(below(finalAgg.head.children.head), Partial),
+        s"the final top-k aggregate must read a partial one through the exchange:\n$plan")
+      // ring-round candidates are not partitioned by a_id, so the partial
+      // buffers must be shuffled
+      if (ring.contains(plan)) assert(exchanged, s"no exchange under the final top-k aggregate:\n$plan")
+    }
+  }
+
+  private def scalaUdfs(df: DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan)(p => p.expressions.flatMap(_.collect {
+      case u: ScalaUDF => u.toString
+    })).flatten
+
+  test("cellJoin salts hot cells with codegen expressions, no ScalaUDF") {
+    import spark.implicits._
+    val polys = (0 until 20).map { i =>
+      val x = (i % 5) * 20.0; val y = (i / 5) * 20.0
+      (i.toLong, Seq(x, x + 15, x + 15, x, x), Seq(y, y, y + 15, y + 15, y))
+    }.toDF("poly_key", "ring_x", "ring_y")
+    val pts = (0 until 200).map(i => (i.toLong, i % 97 * 1.0, i % 89 * 1.0)).toDF("id", "x", "y")
+    // saltThreshold = 0: every cell is hot, so the salting expressions are live
+    val joined = SpatialJoin.cellJoin(spark, pts, "x", "y", polys, res = 5, saltThreshold = 0)
+    assert(scalaUdfs(joined).isEmpty, joined.queryExecution.executedPlan.toString.take(2000))
   }
 }
